@@ -31,18 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from ocr_application_spark.operators.registry import op
 
 
 _CDC_K = 8  # rolling-window gram width (chars)
@@ -151,7 +140,7 @@ _CDC_ORACLE = f"""
 """
 
 
-@_q("dedup_cdc_chunks", _CDC_ORACLE)
+@op("dedup_cdc_chunks", _CDC_ORACLE)
 def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC dedup gate: per doc, chunk count, total/shared chunk chars
     (shared = the chunk's hash appears in >= 2 docs) and the shared
@@ -639,7 +628,7 @@ _CDC_INGEST_ORACLE = f"""
 """
 
 
-@_q("cdc_incremental_ingest", _CDC_INGEST_ORACLE)
+@op("cdc_incremental_ingest", _CDC_INGEST_ORACLE)
 def cdc_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gate: bootstrap the chunk store from the base crawl (doc_id %
     3 != 0), ingest the recrawl increment (remaining docs + shifted

@@ -28,8 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLES: dict = {}
+from ocr_application_spark.operators.registry import op
 
 # regex dialect intersection of Java (Spark) and RE2 (DuckDB): \b, \d,
 # bounded/unbounded repetition and char classes behave identically
@@ -88,6 +87,7 @@ from scrub
 """
 
 
+@op("text_pii_scrub", _PII_ORACLE)
 def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Redaction pass: email -> phone -> IP, in that fixed order (the
     IP count runs AFTER phone redaction so '<PHONE>' can't shadow an
@@ -134,10 +134,6 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["text_pii_scrub"] = text_pii_scrub
-ORACLES["text_pii_scrub"] = _PII_ORACLE
-
-
 _N = 13  # the canonical benchmark-overlap gram size (GPT-3 appendix C)
 _BENCH_MOD = 7  # doc_id % 7 == 0 stands in for the eval/benchmark set
 
@@ -160,6 +156,7 @@ group by 1
 """
 
 
+@op("decontaminate_13gram", _DECON_ORACLE)
 def decontaminate_13gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: (doc_id, n_shared) for every training
     document sharing >= 1 distinct 13-gram with the benchmark set.
@@ -194,10 +191,6 @@ def decontaminate_13gram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_shared"))
     )
-
-
-QUERIES["decontaminate_13gram"] = decontaminate_13gram
-ORACLES["decontaminate_13gram"] = _DECON_ORACLE
 
 
 # --- paragraph-level exact dedup (Lee et al. 2022 "Deduplicating
@@ -238,6 +231,7 @@ from ranked group by 1
 """
 
 
+@op("dedup_paragraphs", _PARA_ORACLE)
 def dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide chunk dedup: (doc_id, n_chunks, n_dropped, digest of
     the surviving text). Keeper = min(struct(doc_id, idx)) per chunk
@@ -288,10 +282,6 @@ def dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["dedup_paragraphs"] = dedup_paragraphs
-ORACLES["dedup_paragraphs"] = _PARA_ORACLE
-
-
 # --- deterministic stratified sampling: reproducible training-mixture
 # draws. Per language stratum, the sample is the _SAMPLE_N docs with the
 # smallest md5(doc_id) — uniform-in-expectation, seedless, and EXACTLY
@@ -311,6 +301,7 @@ select lang, doc_id, rk from (
 """
 
 
+@op("sample_stratified", _SAMPLE_ORACLE)
 def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language deterministic sample of _SAMPLE_N docs: rank by
     md5(doc_id) within each stratum (WindowGroupLimit pushes the rank
@@ -325,10 +316,6 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("lang", "doc_id", F.row_number().over(w).alias("rk"))
         .filter(F.col("rk") <= _SAMPLE_N)
     )
-
-
-QUERIES["sample_stratified"] = sample_stratified
-ORACLES["sample_stratified"] = _SAMPLE_ORACLE
 
 
 # --- Gopher-style repetition quality rules (Rae et al. 2021, table A1):
@@ -418,6 +405,7 @@ def _gram_coverage(docs: DataFrame, n: int) -> DataFrame:
     )
 
 
+@op("text_gopher_repetition", _GOPHER_ORACLE)
 def text_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc repetition stats in exact basis points + the Gopher
     keep/drop verdict (top-2-gram <= 20%, dup-5-grams <= 30%)."""
@@ -455,10 +443,6 @@ def text_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["text_gopher_repetition"] = text_gopher_repetition
-ORACLES["text_gopher_repetition"] = _GOPHER_ORACLE
-
-
 # --- sequence packing (concat-and-chunk, the GPT-style pretraining
 # layout): documents are concatenated in canonical order and cut into
 # fixed _SEQ_LEN-token training sequences; each doc reports the
@@ -492,6 +476,7 @@ from c
 """
 
 
+@op("seq_pack", _PACK_ORACLE)
 def seq_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc packed-sequence assignment: (shard, n_tokens, first_seq,
     last_seq, n_seqs) under concat-and-chunk at _SEQ_LEN tokens."""
@@ -527,10 +512,6 @@ def seq_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["seq_pack"] = seq_pack
-ORACLES["seq_pack"] = _PACK_ORACLE
-
-
 # --- domain-mixture sampling: per-source target rates (the training
 # recipe's "mix web at 25%, curated at 100%" dial), drawn with a
 # seedless deterministic coin so any engine / any partitioning / any
@@ -556,6 +537,7 @@ where r = 3 or u < case r when 0 then '40000000'
 """
 
 
+@op("sample_domain_mix", _MIX_ORACLE)
 def sample_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic weighted mixture draw over the `source` column;
     returns the selected (doc_id, source, rate_bp) rows."""
@@ -580,10 +562,6 @@ def sample_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
             ((F.col("r") + 1) * 2500).cast("int").alias("rate_bp"),
         )
     )
-
-
-QUERIES["sample_domain_mix"] = sample_domain_mix
-ORACLES["sample_domain_mix"] = _MIX_ORACLE
 
 
 # --- frequency-rank quality score (the CCNet perplexity-filter analog,
@@ -660,6 +638,7 @@ from documents d left join per using (doc_id)
 """
 
 
+@op("text_rank_quality", _RANKQ_ORACLE)
 def text_rank_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc frequency-rank quality score in exact basis points +
     keep/drop verdict (see module comment: CCNet analog over ranks)."""
@@ -737,10 +716,6 @@ def text_rank_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["text_rank_quality"] = text_rank_quality
-ORACLES["text_rank_quality"] = _RANKQ_ORACLE
-
-
 # --- exact-substring duplication ratio (the ExactSubstr signal of Lee
 # et al. 2021, "Deduplicating Training Data Makes Language Models
 # Better"): chunk-boundary dedup (dedup_paragraphs) misses duplication
@@ -790,6 +765,7 @@ from documents d left join per using (doc_id)
 """
 
 
+@op("dedup_span_ratio", _SPANDUP_ORACLE)
 def dedup_span_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc duplicated-span stats: sliding _SPAN_W-token windows at
     stride _SPAN_S, duplication in exact basis points."""
@@ -863,10 +839,6 @@ def dedup_span_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["dedup_span_ratio"] = dedup_span_ratio
-ORACLES["dedup_span_ratio"] = _SPANDUP_ORACLE
-
-
 # --- exact-substring span REMOVAL (the second half of Lee et al. 2021's
 # ExactSubstr discipline): dedup_span_ratio only *measures* duplicated
 # spans; this operator actually removes them and returns the rebuilt
@@ -925,6 +897,7 @@ from documents d left join per using (doc_id)
 """
 
 
+@op("dedup_span_strip", _SPANSTRIP_ORACLE)
 def dedup_span_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ExactSubstr removal: strip every token covered by a corpus-
     duplicated _SPAN_W-token window (stride _SPAN_S grid), rebuild the
@@ -978,10 +951,6 @@ def dedup_span_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length(cleaned).alias("n_chars_clean"),
         F.sha2(cleaned, 256).alias("digest"),
     )
-
-
-QUERIES["dedup_span_strip"] = dedup_span_strip
-ORACLES["dedup_span_strip"] = _SPANSTRIP_ORACLE
 
 
 # --- per-source boilerplate-chunk removal (the RefinedWeb / CCNet
@@ -1042,6 +1011,7 @@ from documents d left join per using (doc_id)
 """
 
 
+@op("boilerplate_strip_source", _BOILER_ORACLE)
 def boilerplate_strip_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Remove chunks recurring in >= _BP_DF distinct docs of the same
     source; return cleaned-text sha256 + chunk counts per doc."""
@@ -1110,10 +1080,6 @@ def boilerplate_strip_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["boilerplate_strip_source"] = boilerplate_strip_source
-ORACLES["boilerplate_strip_source"] = _BOILER_ORACLE
-
-
 # --- token-budget sampling (the training-recipe dial in token space):
 # "take ~B tokens from every source" is how a data recipe is actually
 # specified — budgets are in TOKENS, not documents, because sources
@@ -1152,6 +1118,7 @@ where t <= {_BUDGET_TOKENS}
 """
 
 
+@op("sample_token_budget", _TOKBUDGET_ORACLE)
 def sample_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Expected-_BUDGET_TOKENS-token deterministic sample per source
     (see module comment: broadcast per-source totals, md5-hex coin)."""
@@ -1183,10 +1150,6 @@ def sample_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("rate_bp"),
         )
     )
-
-
-QUERIES["sample_token_budget"] = sample_token_budget
-ORACLES["sample_token_budget"] = _TOKBUDGET_ORACLE
 
 
 # --- Gopher quality rule card (Rae et al. 2021, appendix A1.1): the
@@ -1299,16 +1262,13 @@ def gopher_quality_frame(docs: DataFrame, extra: dict | None = None) -> DataFram
     )
 
 
+@op("text_gopher_quality", _GOPHERQ_ORACLE)
 def text_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-rule Gopher quality booleans (exact-integer ratio forms);
     see module comment for the rule card."""
     return gopher_quality_frame(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
     )
-
-
-QUERIES["text_gopher_quality"] = text_gopher_quality
-ORACLES["text_gopher_quality"] = _GOPHERQ_ORACLE
 
 
 # --- C4 word-blocklist gate (Raffel et al. 2020 §2.2's other document
@@ -1366,13 +1326,10 @@ def word_blocklist_gate(docs: DataFrame, terms=_BLOCK_TERMS) -> DataFrame:
     )
 
 
+@op("text_word_blocklist", _BLOCKLIST_ORACLE)
 def text_word_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style blocklist gate over the documents table."""
     return word_blocklist_gate(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-
-
-QUERIES["text_word_blocklist"] = text_word_blocklist
-ORACLES["text_word_blocklist"] = _BLOCKLIST_ORACLE
 
 
 # --- per-host corpus report card -------------------------------------------------
@@ -1452,12 +1409,9 @@ def host_quality_report(docs: DataFrame) -> DataFrame:
     )
 
 
+@op("host_quality_report", _REPORT_ORACLE)
 def host_quality_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return host_quality_report(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-
-
-QUERIES["host_quality_report"] = host_quality_report_q
-ORACLES["host_quality_report"] = _REPORT_ORACLE
 
 
 # --- C4 line-level filter (Raffel et al. 2020, section 2.2): the
@@ -1530,6 +1484,7 @@ def c4_kept_lines(text_col):
     return F.filter(F.split(text_col, "\n"), _c4_line_ok)
 
 
+@op("text_c4_line_filter", _C4_ORACLE)
 def text_c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4 line rules: terminal punctuation + >=5 words + junk markers;
     byte-exact kept-line reconstruction digest (see module comment)."""
@@ -1548,10 +1503,6 @@ def text_c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length(cleaned).alias("n_chars_clean"),
         F.sha2(cleaned, 256).alias("digest"),
     )
-
-
-QUERIES["text_c4_line_filter"] = text_c4_line_filter
-ORACLES["text_c4_line_filter"] = _C4_ORACLE
 
 
 # --- deterministic global shuffle into training shards: the last step
@@ -1596,6 +1547,7 @@ def shard_of(coin_col, n_shards: int):
     return F.conv(F.substring(coin_col, 1, 15), 16, 10).cast("bigint") % n_shards
 
 
+@op("shard_shuffle", _SHARD_ORACLE)
 def shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic shuffle: md5-coin shard + within-shard position
     (pure function of doc_id; see module comment for the scale shape)."""
@@ -1613,10 +1565,6 @@ def shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.row_number().over(w).cast("long").alias("pos"),
         )
     )
-
-
-QUERIES["shard_shuffle"] = shard_shuffle
-ORACLES["shard_shuffle"] = _SHARD_ORACLE
 
 
 # --- epoch-weighted source upsampling (the data-recipe repeat dial:
@@ -1657,6 +1605,7 @@ from c, unnest(range(1, n_copies + 1)) u(copy)
 """
 
 
+@op("sample_epochs_weighted", _EPOCHS_ORACLE)
 def sample_epochs_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per (doc, epoch copy) under exact-rational per-source
     weights (see module comment: integer part + md5-coin fractional)."""
@@ -1696,10 +1645,6 @@ def sample_epochs_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["sample_epochs_weighted"] = sample_epochs_weighted
-ORACLES["sample_epochs_weighted"] = _EPOCHS_ORACLE
-
-
 # --- consecutive-duplicate-line collapse (the Dolma / RedPajama
 # within-document repetition cleanup: crawled pages carry runs of the
 # same line — nav items, pagination, chat scroll artifacts — that
@@ -1728,6 +1673,7 @@ from k
 """
 
 
+@op("dedup_consecutive_lines", _LINEDEDUP_ORACLE)
 def dedup_consecutive_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collapse runs of identical consecutive lines; byte-exact rebuilt
     text via sha256 (see module comment)."""
@@ -1752,10 +1698,6 @@ def dedup_consecutive_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length(cleaned).alias("n_chars_clean"),
         F.sha2(cleaned, 256).alias("digest"),
     )
-
-
-QUERIES["dedup_consecutive_lines"] = dedup_consecutive_lines
-ORACLES["dedup_consecutive_lines"] = _LINEDEDUP_ORACLE
 
 
 # --- DSIR-style importance resampling ----------------------------------------
@@ -1885,6 +1827,7 @@ def dsir_weights(
     )
 
 
+@op("sample_dsir_topk", _DSIR_ORACLE)
 def sample_dsir_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic DSIR selection: the 200 documents whose hashed
     bag-of-words is most English-corpus-like by exact-integer micro-nat
@@ -1894,10 +1837,6 @@ def sample_dsir_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return w.orderBy(
         F.col("dsir_weight_micro").desc(), F.col("doc_id").asc()
     ).limit(_DSIR_TOPK)
-
-
-QUERIES["sample_dsir_topk"] = sample_dsir_topk
-ORACLES["sample_dsir_topk"] = _DSIR_ORACLE
 
 
 # --- cross-split leakage audit ----------------------------------------------
@@ -1960,6 +1899,7 @@ def _leak_oracle() -> str:
     """
 
 
+@op("split_leakage_report", _leak_oracle())
 def split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, split, n_grams, n_leaked, leak_bp) for every valid/test
     document with >= 13 tokens: how much of its distinct-13-gram mass
@@ -2002,10 +1942,6 @@ def split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.withColumn(
         "leak_bp", F.expr("cast(10000 * n_leaked div n_grams as bigint)")
     )
-
-
-QUERIES["split_leakage_report"] = split_leakage_report
-ORACLES["split_leakage_report"] = _leak_oracle()
 
 
 # --- sliding-window token chunking -------------------------------------------
@@ -2083,10 +2019,7 @@ _WINCHUNK_ORACLE = f"""
 """
 
 
+@op("text_window_chunks", _WINCHUNK_ORACLE)
 def text_window_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gate entry for :func:`window_chunks` over the documents table."""
     return window_chunks(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-
-
-QUERIES["text_window_chunks"] = text_window_chunks
-ORACLES["text_window_chunks"] = _WINCHUNK_ORACLE

@@ -19,18 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from ocr_application_spark.operators.registry import op
 
 
 _DEC = "decimal(18,2)"
@@ -57,7 +46,7 @@ def _ratio_q30_sql(p: str, q: str) -> str:
     )
 
 
-@_q(
+@op(
     "forecast_linear",
     """
     with daily as (
@@ -212,6 +201,7 @@ def _ar1_exact_fit(yc: list) -> tuple:
     return phi, mu, h1, h2, h3
 
 
+@op("forecast_ar1", _AR1_ORACLE)  # closed-form estimator, SQL twin
 def forecast_ar1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AR(1) per event_type over the daily series, fit in a grouped-map
     pandas kernel (the reference's ARIMA analog fits monthly,
@@ -247,10 +237,6 @@ def forecast_ar1(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return series_df.groupBy("event_type").applyInPandas(fit, schema=schema)
-
-
-QUERIES["forecast_ar1"] = forecast_ar1
-ORACLES["forecast_ar1"] = _AR1_ORACLE  # closed-form estimator, SQL twin
 
 
 # --- ARIMA(1,1,1) analog: differenced AR(1)+drift with an MA(1) term ---------
@@ -427,6 +413,7 @@ def _ma1_exact(zc: list, phi: float, mu_c: float) -> tuple:
     return theta, e[-1] / 100.0
 
 
+@op("forecast_arima_like", _ARIMA_ORACLE)
 def forecast_arima_like(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ARIMA(1,1,1) analog per event_type: first-difference the daily
     cents series (daily, not the reference's monthly, for the same
@@ -475,7 +462,3 @@ def forecast_arima_like(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return series_df.groupBy("event_type").applyInPandas(fit, schema=schema)
-
-
-QUERIES["forecast_arima_like"] = forecast_arima_like
-ORACLES["forecast_arima_like"] = _ARIMA_ORACLE

@@ -22,8 +22,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLES: dict = {}
+from ocr_application_spark.operators.registry import op
 
 
 def _base_inc(df: DataFrame, id_col: str):
@@ -74,6 +73,7 @@ select doc_id, payload, src from upd
 """
 
 
+@op("snapshot_merge_upsert", _ORACLE)
 def snapshot_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Commit base rows (doc_id % 4 != 3), merge updates whose keys are
     doc_id % 8 in {0, 3} — %8==0 rows exist in base (matched -> replaced
@@ -107,10 +107,6 @@ def snapshot_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_snapshot(spark, tbl)
 
 
-QUERIES["snapshot_merge_upsert"] = snapshot_merge_upsert
-ORACLES["snapshot_merge_upsert"] = _ORACLE
-
-
 _INGEST_ORACLE = """
 with base as (
   select doc_id, text from documents where doc_id % 3 != 0
@@ -139,6 +135,7 @@ left join idx i on i.fingerprint = f.fingerprint
 """
 
 
+@op("dedup_incremental_ingest", _INGEST_ORACLE)
 def dedup_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recrawl ingest dedup, end-to-end through the REAL snapshot
     machinery: bootstrap the corpus fingerprint index from a base crawl
@@ -157,10 +154,6 @@ def dedup_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _bootstrap_then_recrawl(
         spark, fingerprint_index_ingest, "gate_fp_index", base, inc
     )
-
-
-QUERIES["dedup_incremental_ingest"] = dedup_incremental_ingest
-ORACLES["dedup_incremental_ingest"] = _INGEST_ORACLE
 
 
 def _minhash_ingest_oracle() -> str:
@@ -222,6 +215,7 @@ left join incdup d on d.doc_id = i.doc_id
 """
 
 
+@op("neardup_incremental_ingest", _minhash_ingest_oracle())
 def neardup_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NEAR-dup recrawl ingest through the real snapshot machinery (the
     LSH sibling of ``dedup_incremental_ingest``): bootstrap the corpus
@@ -238,10 +232,6 @@ def neardup_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _bootstrap_then_recrawl(
         spark, minhash_index_ingest, "gate_mh_index", base, inc
     )
-
-
-QUERIES["neardup_incremental_ingest"] = neardup_incremental_ingest
-ORACLES["neardup_incremental_ingest"] = _minhash_ingest_oracle()
 
 
 def _embedding_ingest_oracle() -> str:
@@ -308,6 +298,7 @@ left join incdup d on d.vec_id = i.vec_id
 """
 
 
+@op("semantic_incremental_ingest", _embedding_ingest_oracle())
 def semantic_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SEMANTIC recrawl ingest through the real snapshot machinery (the
     embedding sibling of the exact/minhash ingest gates): bootstrap the
@@ -327,10 +318,6 @@ def semantic_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _bootstrap_then_recrawl(
         spark, embedding_index_ingest, "gate_emb_index", base, inc
     )
-
-
-QUERIES["semantic_incremental_ingest"] = semantic_incremental_ingest
-ORACLES["semantic_incremental_ingest"] = _embedding_ingest_oracle()
 
 
 def _winnow_ingest_oracle() -> str:
@@ -413,6 +400,7 @@ left join incdup d on d.doc_id = i.doc_id
 """
 
 
+@op("overlap_incremental_ingest", _winnow_ingest_oracle())
 def overlap_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PARTIAL-overlap recrawl ingest through the real snapshot
     machinery (the winnowing sibling of the exact/minhash/semantic
@@ -433,10 +421,6 @@ def overlap_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["overlap_incremental_ingest"] = overlap_incremental_ingest
-ORACLES["overlap_incremental_ingest"] = _winnow_ingest_oracle()
-
-
 _DELETE_ORACLE = """
 with base as (
   select doc_id, substr(text, 1, 40) as payload
@@ -446,6 +430,7 @@ select doc_id, payload from base where doc_id % 5 != 1
 """
 
 
+@op("snapshot_delete_rows", _DELETE_ORACLE)
 def snapshot_delete_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Commit base rows across two files, copy-on-write DELETE the
     doc_id % 5 == 1 keys plus a batch of keys NOT in the table (the
@@ -480,10 +465,6 @@ def snapshot_delete_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_snapshot(spark, tbl)
 
 
-QUERIES["snapshot_delete_rows"] = snapshot_delete_rows
-ORACLES["snapshot_delete_rows"] = _DELETE_ORACLE
-
-
 _ZORDER_ORACLE = """
 with base as (
   select doc_id,
@@ -497,6 +478,7 @@ where x between 10 and 15 and y between 30 and 60
 """
 
 
+@op("snapshot_zorder_scan", _ZORDER_ORACLE)
 def snapshot_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Commit a hash-distributed table, z-order-cluster it on (x, y),
     then zone-map-scan a 2-d range. The oracle is the plain filter —
@@ -529,10 +511,6 @@ def snapshot_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scan_snapshot(spark, tbl, {"x": (10, 15), "y": (30, 60)})
 
 
-QUERIES["snapshot_zorder_scan"] = snapshot_zorder_scan
-ORACLES["snapshot_zorder_scan"] = _ZORDER_ORACLE
-
-
 _WAP_ORACLE = """
 with base as (
   select doc_id, substr(text, 1, 40) as payload, 'base' as src
@@ -548,6 +526,7 @@ select doc_id, payload, src from staged
 """
 
 
+@op("snapshot_wap_publish", _WAP_ORACLE)
 def snapshot_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write-audit-publish over the snapshot refs layer: commit a base
     table, stage an increment on an ``audit`` branch (asserting in-query
@@ -580,10 +559,6 @@ def snapshot_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert read_snapshot(spark, tbl).count() == n_main, "staged rows leaked to main"
     publish_branch(tbl, "audit")
     return read_snapshot(spark, tbl)
-
-
-QUERIES["snapshot_wap_publish"] = snapshot_wap_publish
-ORACLES["snapshot_wap_publish"] = _WAP_ORACLE
 
 
 # --- corpus drift report between two snapshot versions ------------------------
@@ -648,6 +623,7 @@ from j
 """
 
 
+@op("snapshot_drift_report", _DRIFT_ORACLE)
 def snapshot_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Commit the corpus in two waves ((doc_id, lang, n_tokens) rows:
     doc_id % 3 != 0, then the rest), time-travel-read v1 against the
@@ -716,7 +692,3 @@ def snapshot_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("kl_term_micronat"),
     )
-
-
-QUERIES["snapshot_drift_report"] = snapshot_drift_report
-ORACLES["snapshot_drift_report"] = _DRIFT_ORACLE

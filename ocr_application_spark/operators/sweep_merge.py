@@ -19,9 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ocr_application_spark.operators.fixtures import REGIONS_CTE, regions
-
-QUERIES: dict = {}
-ORACLES: dict = {}
+from ocr_application_spark.operators.registry import op
 
 IOU_MERGE = 0.5
 
@@ -46,26 +44,6 @@ def merge_sweep(boxes: list[tuple[float, float, float, float]]) -> list[tuple[fl
     return [tuple(b) for b in out]
 
 
-def w5_sweep_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merged boxes per document over the regions fixture."""
-    r = regions(spark, sf_dir).select("doc_id", "x0", "y0", "x1", "y1")
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        doc = pdf["doc_id"].iloc[0]
-        merged = merge_sweep(list(zip(pdf["x0"], pdf["y0"], pdf["x1"], pdf["y1"])))
-        return pd.DataFrame(
-            [(doc, i, *b) for i, b in enumerate(merged)],
-            columns=["doc_id", "box_id", "x0", "y0", "x1", "y1"],
-        )
-
-    return r.groupBy("doc_id").applyInPandas(
-        fold, schema="doc_id long, box_id int, x0 double, y0 double, x1 double, y1 double"
-    )
-
-
-QUERIES["w5_sweep_merge"] = w5_sweep_merge
-
-
 # The sequential fold IS SQL-expressible after all — as a recursive CTE
 # whose state is the list of merged boxes so far (one step per rank,
 # max ~7 ranks/doc in the fixture). Verbose but exact: same sort key,
@@ -84,7 +62,7 @@ def _iou_gt_half(last: str, nb: str) -> str:
 
 _LAST = "out[len(out)]"
 
-ORACLES["w5_sweep_merge"] = f"""
+_W5_ORACLE = f"""
 with recursive {REGIONS_CTE},
 boxes as (
   select doc_id, cast(x0 as double) x0, cast(y0 as double) y0,
@@ -114,3 +92,21 @@ exploded as (
 select doc_id, box_id, bx.x0 as x0, bx.y0 as y0, bx.x1 as x1, bx.y1 as y1
 from exploded
 """
+
+
+@op("w5_sweep_merge", _W5_ORACLE)
+def w5_sweep_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Merged boxes per document over the regions fixture."""
+    r = regions(spark, sf_dir).select("doc_id", "x0", "y0", "x1", "y1")
+
+    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        doc = pdf["doc_id"].iloc[0]
+        merged = merge_sweep(list(zip(pdf["x0"], pdf["y0"], pdf["x1"], pdf["y1"])))
+        return pd.DataFrame(
+            [(doc, i, *b) for i, b in enumerate(merged)],
+            columns=["doc_id", "box_id", "x0", "y0", "x1", "y1"],
+        )
+
+    return r.groupBy("doc_id").applyInPandas(
+        fold, schema="doc_id long, box_id int, x0 double, y0 double, x1 double, y1 double"
+    )

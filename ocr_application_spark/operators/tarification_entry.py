@@ -20,8 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLES: dict = {}
+from ocr_application_spark.operators.registry import op
 
 # handle to the previous invocation's persisted match-set, released at
 # the start of the next call (bounds cache growth in long sessions)
@@ -188,6 +187,7 @@ def _fixture_catalog_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@op("tarification_pipeline", _ORACLE)
 def tarification_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production chain end-to-end, one row out: parse_catalog (S9)
     -> tarify (J1 + enrich) -> summarize (A1/A2) x reserve_estimate (A3)
@@ -225,7 +225,3 @@ def tarification_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("total_mois").cast(_DEC)).cast("double").alias("total_all_months"),
     )
     return summarize(tarified).crossJoin(reserve_estimate(tarified)).crossJoin(ms)
-
-
-QUERIES["tarification_pipeline"] = tarification_pipeline
-ORACLES["tarification_pipeline"] = _ORACLE

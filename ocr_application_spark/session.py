@@ -20,6 +20,18 @@ import threading
 from pyspark.sql import SparkSession
 
 
+def _driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else 40% of physical RAM (MemTotal).
+    The JVM heap is not all the driver uses: the Python workers, Arrow
+    buffers and off-heap shuffle share the box, so a heap sized past
+    the RAM gets the JVM OOM-killed mid-run."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{ram * 2 // 5 // 2**20}m"
+
+
 def get_spark(
     app_name: str = "ocr_application_spark",
     cores: int | None = None,
@@ -67,7 +79,7 @@ def get_spark(
         .config("spark.sql.execution.pythonUDF.arrow.enabled", "true")
         # 128m scan splits: good balance for wide binary 'html' columns
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

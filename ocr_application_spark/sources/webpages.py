@@ -138,4 +138,7 @@ def read_pages(spark: SparkSession, path: str) -> DataFrame:
 
 
 def default_scratch() -> str:
-    return os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
+    """``$SPARK_GRAFT_SCRATCH``, else ``.scratch`` in the checkout that
+    holds this package."""
+    fallback = os.path.join(os.path.dirname(__file__), "..", "..", ".scratch")
+    return os.environ.get("SPARK_GRAFT_SCRATCH", os.path.abspath(fallback))

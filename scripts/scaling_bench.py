@@ -21,6 +21,8 @@ import subprocess
 import sys
 from pathlib import Path
 
+ROOT = Path(__file__).resolve().parents[1]
+
 _WORKER = """
 import json, statistics, sys, time
 cores, n_docs, path = int(sys.argv[1]), int(sys.argv[2]), sys.argv[3]
@@ -68,7 +70,7 @@ spark.stop()
 
 
 def _run_checked(argv: list[str]) -> subprocess.CompletedProcess:
-    out = subprocess.run(argv, capture_output=True, text=True, cwd="/root/repo")
+    out = subprocess.run(argv, capture_output=True, text=True, cwd=ROOT)
     if out.returncode != 0:
         sys.stderr.write(out.stderr[-4000:])  # surface the Spark traceback
         raise SystemExit(f"worker failed (exit {out.returncode})")
@@ -85,7 +87,7 @@ def main() -> None:
     small = int(sys.argv[2]) if len(sys.argv) > 2 else 4
     big = int(sys.argv[3]) if len(sys.argv) > 3 else 16
     reps = int(sys.argv[4]) if len(sys.argv) > 4 else 3
-    path = "/root/repo/.scratch/scaling_pages"
+    path = str(ROOT / ".scratch" / "scaling_pages")
     _run_checked([sys.executable, "-c", _GEN, str(n_docs), path])
     # Interleave fresh-JVM repetitions of the two levels: sandbox-VM
     # throughput drifts ~±20% over minutes, so a single small/big pair
@@ -177,8 +179,8 @@ Reference baseline for context: the reference's architecture caps at
 BASELINE.md); this engine does three orders of magnitude more per node
 and scales out by url-hash bucket.
 """
-    Path("/root/repo/BENCH").mkdir(exist_ok=True)
-    Path("/root/repo/BENCH/BASELINE.md").write_text(md)
+    (ROOT / "BENCH").mkdir(exist_ok=True)
+    (ROOT / "BENCH" / "BASELINE.md").write_text(md)
 
 
 if __name__ == "__main__":

@@ -10,7 +10,7 @@ from ocr_application_spark.sources.webpages import default_scratch
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", cores=8, shuffle_partitions=8)
+    s = get_spark("tests", shuffle_partitions=8)
     yield s
     s.stop()
 

@@ -81,7 +81,7 @@ def test_mean_chunk_size_tracks_the_mask(spark):
 
 
 def test_gate_ratio_bounds_and_self_consistency(spark):
-    out = C.QUERIES["dedup_cdc_chunks"](spark, SF)
+    out = C.dedup_cdc_chunks(spark, SF)
     bad = out.filter(
         (F.col("shared_chars") > F.col("total_chars"))
         | (F.col("shared_bp") < 0)
@@ -92,7 +92,7 @@ def test_gate_ratio_bounds_and_self_consistency(spark):
 
 
 def test_plan_no_cartesian_and_bounded_exchanges(spark):
-    df = C.QUERIES["dedup_cdc_chunks"](spark, SF)
+    df = C.dedup_cdc_chunks(spark, SF)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
